@@ -271,7 +271,7 @@ object Bench {
                        Option[org.apache.spark.sql.DataFrame]): Long =
         graft.sources.Warehouse.servedFrameMerged(
           spark, name, dir, table, fp)(cold)(merge).count()
-      val docs = () => spark.read.parquet(s"$dir/documents.parquet")
+      val docs = () => Tables.documents(spark, dir)
       def noCold = sys.error("merge bench: cold must not run")
         : org.apache.spark.sql.DataFrame
       val mhMerge = (old: org.apache.spark.sql.DataFrame,

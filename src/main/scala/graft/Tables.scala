@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Typed loaders for the driver-generated test tables (TESTDATA.md,
   * FIXTURES.md §B). Every query in the inventory reads through these so
@@ -15,7 +16,45 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    spark.read.schema(schema(spark, dir, name)).parquet(s"$dir/$name.parquet")
+
+  /** Session confs that change what parquet schema inference returns
+    * for the same bytes — part of the memo key, so flipping one (as
+    * [[events]] does with nanosAsLong) re-infers. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  /** path → (stamp, schema): one entry per table, replaced whenever
+    * the stamp moves. */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String,
+    ((Map[String, (Long, Long)], Seq[String]), StructType)]()
+
+  /** The parquet schema of `$dir/$name.parquet`, memoized on its data
+    * files' stamp (name, length and mtime of every non-hidden file,
+    * [[graft.sources.Warehouse.corpusFiles]]) plus the inference
+    * confs. A bare `spark.read.parquet` runs one Spark job per call to
+    * infer the schema; a warm entry costs one directory listing. Reuse
+    * is sound only while the files are unchanged, so an append or an
+    * in-place rewrite (new name, length or mtime) always re-infers. The
+    * stamp is taken BEFORE the inference: a write racing the inference
+    * leaves an entry whose stamp is already stale, so the next call
+    * misses rather than serving it. Corpus tables are one file or a
+    * flat directory of part files, which is what the stamp lists. */
+  def schema(spark: SparkSession, dir: String, name: String): StructType = {
+    val path = s"$dir/$name.parquet"
+    val stamp = (graft.sources.Warehouse.corpusFiles(spark, dir, name),
+      InferenceConfs.map(k => spark.conf.get(k)))
+    val hit = schemas.get(path)
+    if (hit != null && hit._1 == stamp) hit._2
+    else {
+      val inferred = spark.read.parquet(path).schema
+      schemas.put(path, (stamp, inferred))
+      inferred
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = t(s, d, "nation")
@@ -36,12 +75,13 @@ object Tables {
     *    calendar functions.
     * DuckDB oracle parity: `epoch_ns(ts)` ↔ `ts_ns`, `CAST(ts AS
     * TIMESTAMP)` ↔ `ts` (naive DuckDB timestamps == UTC wall clock).
+    * The shape test reads the memoized schema, so it runs no job.
     */
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = t(s, d, "events")
     raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
+      case LongType =>
         raw.withColumnRenamed("ts", "ts_ns")
           .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
       case _ =>

@@ -808,11 +808,13 @@ object Multimodal {
   /** INCREMENTAL image near-dup ingest — the multimodal member of the
     * incremental family (exact/minhash/CC/semantic/verbatim/decontam
     * all have one; production image pipelines ingest batches the same
-    * way). The corpus's chunk index is built once and persisted
-    * (localCheckpoint stands in for the write); an arriving batch
-    * chunks its own sketches and band-joins against index ∪ own-chunks,
-    * so every candidate touches a batch image by construction and
-    * corpus×corpus is never re-chunked or re-joined. Verify is inline —
+    * way). The corpus side is the chunk index a production pipeline
+    * persists; an arriving batch chunks its own sketches and
+    * band-joins against index ∪ own-chunks, so every candidate touches
+    * a batch image by construction and corpus×corpus is never joined.
+    * The index is planned inline: its scan is linear, and a per-call
+    * checkpoint would run an eager job and leave a persisted RDD behind
+    * on every call. Verify is inline —
     * the chunk rows carry both sketches, so exact `bit_count(a ⊕ b)`
     * needs no fetch join. Pigeonhole-exactness of the blocking makes
     * the output EQUAL to the full recompute restricted to
@@ -823,7 +825,6 @@ object Multimodal {
                             chunkWidth: Int,
                             hammingMax: Int = PhashHammingMax): DataFrame = {
     val index = phashChunks(sk.filter(!batchPred), chunkWidth)
-      .localCheckpoint(true)
     val batchChunks = phashChunks(sk.filter(batchPred), chunkWidth)
     batchChunks.as("a")
       .join(index.unionByName(batchChunks).as("b"), Seq("c", "v"))
@@ -1669,8 +1670,8 @@ object Multimodal {
     // Incremental image ingest — see phashPairsIncremental: the
     // arriving batch (the doc_id % 5 slice every incremental key uses;
     // the planted twins split across batch and corpus, keeping the
-    // answer non-empty at every SF) near-dups against the persisted
-    // chunk index + itself; the corpus is never re-chunked. Oracle =
+    // answer non-empty at every SF) near-dups against the corpus
+    // chunk index + itself; corpus×corpus is never joined. Oracle =
     // the full phash pair replay restricted to batch-touching pairs,
     // so the hash match proves incremental == full.
     "q_mm_phash_incremental" -> ((s, dir) => {

@@ -761,10 +761,6 @@ object Similarity {
       .groupBy(col("vec_id"), col("m"))
       .agg(min_by(col("k"), struct(col("key"), col("k"))).as("code"))
 
-  /** [[pqEncodeWith]] against the deterministic first-K codebook. */
-  def pqEncode(e: DataFrame, kCodes: Int): DataFrame =
-    pqEncodeWith(e, pqCodebook(e, kCodes))
-
   /** ADC top-k over PQ codes: probes keep exact subvectors, candidates
     * are their codes; approx dot = Σ_m lookup(probe, m, code). Codebook-
     * agnostic — the oracle-checked key passes the deterministic
@@ -976,7 +972,7 @@ object Similarity {
     * frames off the session memos (round-22), so a resolution pays the
     * probe side only. Same arithmetic, same hashes. */
   private def ivfPqResTopKServed(s: SparkSession, dir: String, e: DataFrame,
-                                 n: Long, nProbes: Int, k: Int): DataFrame =
+                                 nProbes: Int, k: Int): DataFrame =
     searchIvfPqResidualIndex(resCodeStore(s, dir), e,
       resCentroidsArtifact(s, dir), resCodebookArtifact(s, dir), nProbes, k)
 
@@ -1001,27 +997,9 @@ object Similarity {
     * build row — the chain's dominant term at ×10). Same arithmetic,
     * same hashes. */
   private def pqTopKServed(s: SparkSession, dir: String, e: DataFrame,
-                           n: Long, nProbes: Int, k: Int): DataFrame =
+                           nProbes: Int, k: Int): DataFrame =
     pqTopKFromCodes(pqCodeStore(s, dir), e,
       pqCodebookArtifact(s, dir), nProbes, k)
-
-  /** IVF-PQ — the two quantizers COMPOSED, which is what production ANN
-    * systems actually deploy (FAISS's IVFPQ): the coarse quantizer
-    * restricts the search to the probe's cell (corpus/K candidates),
-    * and within the cell candidates are ranked by ADC over their PQ
-    * codes instead of their raw vectors — so the index stores
-    * (cell, M codes) per vector and the raw corpus never enters the
-    * query path at all. Index build co-locates cell + codes with one
-    * corpus-linear join (build-time, once); queries broadcast the
-    * probe's per-cell ADC lookup table and rank map-side. Both
-    * quantizers deterministic ⟹ oracle-exact; `q_knn_ivfpq_recall`
-    * measures the composed approximation against brute truth. */
-  def ivfPqTopK(e: DataFrame, kCentroids: Int, kCodes: Int,
-                nProbes: Int, k: Int, nprobe: Int = IvfNprobe): DataFrame = {
-    val centroids = e.filter(col("vec_id") < kCentroids)
-      .select(col("vec_id").as("cid"), col("v").as("c"))
-    ivfPqTopKWith(e, centroids, pqCodebook(e, kCodes), nProbes, k, nprobe)
-  }
 
   /** The IVF-PQ INDEX: (cand_id, cell, m, code) — the artifact a
     * production pipeline persists in place of the raw vectors (M bytes
@@ -1043,7 +1021,11 @@ object Similarity {
       .select(col("vec_id").as("cand_id"), col("cell"),
         col("m"), col("code").as("k"))
 
-  /** IVF-PQ search over arbitrary coarse centroids + PQ codebook —
+  /** IVF-PQ — the two quantizers COMPOSED, as production ANN systems
+    * deploy it (FAISS's IVFPQ): the coarse quantizer restricts the
+    * search to the probe's cells, and within them candidates rank by
+    * ADC over their PQ codes, so the raw corpus never enters the query
+    * path. Works over arbitrary coarse centroids + PQ codebook —
     * deterministic first-K frames give the oracle-checked key; trained
     * ([[kmeansCentroids]] + [[kmeansPqCodebook]]) frames give the
     * production-quality composition (PipelineSpec). */
@@ -1702,15 +1684,13 @@ object Similarity {
     // Deterministic quantizers ⟹ store ≡ inline ⟹ hashes unchanged.
     "q_knn_ivfpq_res" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir).select(col("vec_id"), expr(quant).as("v"))
-      val n = graft.sources.Warehouse.countMax(s, s"emb:$dir", e, "vec_id")._1
-      ivfPqResTopKServed(s, dir, e, n, 8, 5)
+      ivfPqResTopKServed(s, dir, e, 8, 5)
     }),
 
     "q_knn_ivfpq_res_recall" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir).select(col("vec_id"), expr(quant).as("v"))
-      val n = graft.sources.Warehouse.countMax(s, s"emb:$dir", e, "vec_id")._1
       val truth = knnBruteTruth(s, dir).select("probe_id", "cand_id")
-      recallVs(truth, ivfPqResTopKServed(s, dir, e, n, 64, 5))
+      recallVs(truth, ivfPqResTopKServed(s, dir, e, 64, 5))
     }),
 
     // PQ-compressed ANN + its recall audit: deterministic codebooks, so
@@ -2035,9 +2015,9 @@ object Similarity {
         Seq(
           ("ivf_flat", 512L, ivfTopK(s, dir, kk, 64, 5)
             .select("probe_id", "cand_id")),
-          ("pq", 8L, pqTopKServed(s, dir, e, n, 64, 5)
+          ("pq", 8L, pqTopKServed(s, dir, e, 64, 5)
             .select("probe_id", "cand_id")),
-          ("ivfpq_res", 12L, ivfPqResTopKServed(s, dir, e, n, 64, 5)
+          ("ivfpq_res", 12L, ivfPqResTopKServed(s, dir, e, 64, 5)
             .select("probe_id", "cand_id")))
           .map { case (name, bytes, apx) =>
             truth.join(broadcast(apx.select(col("probe_id"), col("cand_id"),
@@ -2075,10 +2055,10 @@ object Similarity {
     val e = Tables.embeddings(s, dir).select(col("vec_id"), expr(quant).as("v"))
     val served = knnSelectedTier(s, dir) match {
       case "pq" =>
-        pqTopKServed(s, dir, e, n, nProbes, k)
+        pqTopKServed(s, dir, e, nProbes, k)
           .withColumnRenamed("adot", "score")
       case "ivfpq_res" =>
-        ivfPqResTopKServed(s, dir, e, n, nProbes, k)
+        ivfPqResTopKServed(s, dir, e, nProbes, k)
           .withColumnRenamed("adot", "score")
       case _ =>
         ivfTopK(s, dir, kk, nProbes, k).withColumnRenamed("dot", "score")
@@ -2169,10 +2149,10 @@ object Similarity {
       case "ivf_trained" =>
         ivfTrainedServe(s, dir, nProbes, k).withColumnRenamed("dot", "score")
       case "pq" =>
-        pqTopKServed(s, dir, e, n, nProbes, k)
+        pqTopKServed(s, dir, e, nProbes, k)
           .withColumnRenamed("adot", "score")
       case "ivfpq_res" =>
-        ivfPqResTopKServed(s, dir, e, n, nProbes, k)
+        ivfPqResTopKServed(s, dir, e, nProbes, k)
           .withColumnRenamed("adot", "score")
       case _ =>
         ivfTopK(s, dir, kk, nProbes, k).withColumnRenamed("dot", "score")

@@ -769,8 +769,10 @@ object Warehouse {
       else {
         val oldStore = s.read.parquet(
           new org.apache.hadoop.fs.Path(whRoot, oldName).toString)
-        val delta = s.read.parquet(
-          newFiles.map(f => s"$dir/$srcTable.parquet/$f"): _*)
+        // The delta's part files are the source table's own files, so
+        // they read under its memoized schema (no inference job).
+        val delta = s.read.schema(graft.Tables.schema(s, dir, srcTable))
+          .parquet(newFiles.map(f => s"$dir/$srcTable.parquet/$f"): _*)
         merge(oldStore, delta)
       }
     }
