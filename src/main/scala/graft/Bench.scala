@@ -282,8 +282,8 @@ object Bench {
         Some(old.unionByName(operators.Dedup.ngramPairsTouching(
           docs(), b.select(col("doc_id")))))
       // Untimed cold seeds at the base scratch state.
-      val dFp1 = tools.MergeStage.fpOf(spark, dir, "documents", "doc_id")
-      val eFp1 = tools.MergeStage.fpOf(spark, dir, "events", "event_id")
+      val dFp1 = graft.sources.Warehouse.docsFp(spark, dir)
+      val eFp1 = graft.sources.Warehouse.eventsFp(spark, dir)
       fam("bm_bands", "documents", dFp1)(
         operators.Dedup.minhashBandIndex(docs()))(mhMerge)
       fam("bm_ngram", "documents", dFp1)(
@@ -303,8 +303,8 @@ object Bench {
         operators.Curation.verbatimIndexMerged(vbW))
       tools.MergeStage.append(spark, dir, "documents", "doc_id")
       tools.MergeStage.append(spark, dir, "events", "event_id")
-      val dFp2 = tools.MergeStage.fpOf(spark, dir, "documents", "doc_id")
-      val eFp2 = tools.MergeStage.fpOf(spark, dir, "events", "event_id")
+      val dFp2 = graft.sources.Warehouse.docsFp(spark, dir)
+      val eFp2 = graft.sources.Warehouse.eventsFp(spark, dir)
       val timed = Seq[(String, () => Long)](
         ("minhash_bands", () => fam("bm_bands", "documents", dFp2)(noCold)(mhMerge)),
         ("ngram_pairs", () => fam("bm_ngram", "documents", dFp2)(noCold)(ngMerge)),

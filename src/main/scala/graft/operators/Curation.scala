@@ -237,12 +237,10 @@ object Curation {
         s, "doc_shingles", dir, "documents",
         graft.sources.Warehouse.docsFp(s, dir)) {
         val docs = Tables.documents(s, dir)
-        val n = graft.sources.Warehouse.countMax(
-          s, s"docs:$dir", docs, "doc_id")._1
+        val n = graft.sources.Warehouse.corpusStats(s, dir, "documents")._1
         shingles(docs, deriveShingleWidth(n))
       } { (old, batch) =>
-        val n = graft.sources.Warehouse.countMax(
-          s, s"docs:$dir", Tables.documents(s, dir), "doc_id")._1
+        val n = graft.sources.Warehouse.corpusStats(s, dir, "documents")._1
         if (shingleWidthCrossed(n, batch.count())) None
         else Some(old.unionByName(shingles(batch, deriveShingleWidth(n))))
       })
@@ -555,14 +553,9 @@ object Curation {
     * stage frames, so whichever runs first builds them and the other
     * reads (the per-stage localCheckpoint already stands in for the
     * stage table a production funnel writes — this cache is just the
-    * "read the table you already wrote" half of that story). Stopped
-    * sessions are evicted, as in [[Artifacts]]. */
-  private val funnelCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), FunnelFrames]()
-
-  private def funnelFramesArtifact(s: SparkSession, dir: String): FunnelFrames = {
-    funnelCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    funnelCache.computeIfAbsent((s, dir), _ => {
+    * "read the table you already wrote" half of that story). */
+  private def funnelFramesArtifact(s: SparkSession, dir: String): FunnelFrames =
+    Artifacts.cached(s, s"funnel:$dir") {
       // Warehouse materializer (round 16): s1 and the five drop sets
       // persist as per-stage tables keyed by path digest + corpus
       // fingerprint — the funnel's six stages resolve table-by-table,
@@ -613,14 +606,12 @@ object Curation {
           s.table(name)
         }
       }
-      val (nDocs, _) = graft.sources.Warehouse.countMax(
-        s, s"docs:$dir", Tables.documents(s, dir), "doc_id")
+      val (nDocs, _) = graft.sources.Warehouse.corpusStats(s, dir, "documents")
       funnelFrames(Tables.documents(s, dir), Tables.embeddings(s, dir),
         mat, nInputHint = nDocs,
         bandIndex = Some(() => Dedup.minhashBandStore(s, dir)),
         docShingles = Some(() => docShingleStore(s, dir)))
-    })
-  }
+    }
 
   /** Build the shared span-family artifacts now (index → matches →
     * offsets, plus the incremental key's settled-slice index) —
@@ -899,43 +890,6 @@ object Curation {
           .map(_.mkString(" "))).toSeq.distinct)
   }
 
-  /** One broadcast per (session, eval-set CONTENT): gate
-    * re-construction (e.g. a restarted stream in the same session)
-    * reuses the existing broadcast instead of shipping another copy
-    * that is never destroyed — the round-7 leak. The key is a digest
-    * over the SORTED shingles plus the width, so content-equal sets
-    * built in a different order dedupe correctly (a Seq-keyed cache
-    * would miss on reorder and silently reintroduce the leak) and the
-    * cache holds a 32-char string per entry, not a driver-side copy of
-    * a multi-MB shingle Seq. Bounded by the number of distinct eval
-    * sets a session gates against; entries for STOPPED sessions are
-    * evicted on each gate construction (a driver that cycles sessions
-    * would otherwise pin every dead SparkSession and its Broadcast
-    * value for the process lifetime); live entries die with the
-    * driver. */
-  private val gateBroadcasts = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    org.apache.spark.broadcast.Broadcast[_]]()
-
-  /** ONE broadcast per (session, content digest) for EVERY gate's
-    * frozen artifact — round 16 generalizes the contaminationGate-only
-    * cache after review found the semantic and importance gates
-    * re-broadcasting per construction (the round-7 leak, reopened
-    * three doors down: a driver that reconstructs its gates per stream
-    * restart accumulated one executor copy of a potentially-GB model
-    * per restart). Keyed by CONTENT digest, so a reloaded-but-equal
-    * artifact reuses the live broadcast; stopped sessions evicted on
-    * every construction (their torrent blocks are gone and the key
-    * pins the dead SparkSession). */
-  private def cachedGateBroadcast[T: scala.reflect.ClassTag](
-      s: SparkSession, key: String)(
-      mk: => T): org.apache.spark.broadcast.Broadcast[T] = {
-    gateBroadcasts.keySet.removeIf(_._1.sparkContext.isStopped)
-    gateBroadcasts.computeIfAbsent((s, key),
-      _ => s.sparkContext.broadcast(mk))
-      .asInstanceOf[org.apache.spark.broadcast.Broadcast[T]]
-  }
-
   /** Order-independent content digest of an [[ImportanceModel]] — one
     * linear pass, no sort (the maps can hold 10⁷ entries): per-entry
     * hashes are SUMMED, so equal content digests equal regardless of
@@ -956,6 +910,16 @@ object Curation {
     s"${m.cfT.size}:${fold(m.cfT)}:${m.cfR.size}:${fold(m.cfR)}:${m.nR}:${m.nT}"
   }
 
+  /** Content digest of an eval set — the key of its gate broadcast
+    * (`gate-bc:` in [[Artifacts]]): one broadcast per (session, eval-set
+    * CONTENT), so gate re-construction (e.g. a restarted stream in the
+    * same session) reuses the live broadcast instead of shipping another
+    * copy that is never destroyed — the round-7 leak. The digest is over
+    * the SORTED shingles plus the width, so content-equal sets built in
+    * a different order dedupe correctly (a Seq-keyed memo would miss on
+    * reorder and silently reintroduce the leak), and the memo holds a
+    * 32-char string per entry, not a driver-side copy of a multi-MB
+    * shingle Seq. */
   private def evalDigest(e: EvalShingles): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     // Length-prefixed entries: unambiguous regardless of shingle content.
@@ -982,13 +946,6 @@ object Curation {
     *    call itself codegens (ScalaUDF is not a CodegenFallback;
     *    asserted in the spec). */
   def contaminationGate(stream: DataFrame, eval: EvalShingles): DataFrame = {
-    // Evict cache entries whose session has been stopped — on EVERY
-    // gate construction (not just the broadcast branch, or a driver
-    // that built one large-set gate and thereafter only small-set
-    // gates would pin the dead session forever): their broadcasts are
-    // unusable (torrent blocks are gone) and keeping the key pins the
-    // dead SparkSession itself.
-    gateBroadcasts.keySet.removeIf(_._1.sparkContext.isStopped)
     if (eval.shingles.size <= GateInlineMax)
       // coalesce(…, false): a NULL text has no shingles and cannot be
       // contaminated, so it passes — the same verdict the broadcast
@@ -1000,8 +957,9 @@ object Curation {
           lit(eval.shingles.toArray)),
         lit(false)))
     else {
-      val bc = cachedGateBroadcast(stream.sparkSession,
-        "contam:" + evalDigest(eval))(eval.shingles.toSet)
+      val s = stream.sparkSession
+      val bc = Artifacts.cached(s, "gate-bc:contam:" + evalDigest(eval))(
+        s.sparkContext.broadcast(eval.shingles.toSet))
       val hit = udf((shs: Seq[String]) =>
         shs != null && shs.exists(bc.value.contains))
       stream.filter(!hit(shingleArray(col("text"), eval.width)))
@@ -1052,8 +1010,8 @@ object Curation {
     // different vector sets with equal hash sums would silently reuse
     // the wrong prepared broadcast). Eval sets are gate-sized, so the
     // per-vector md5 pass is trivial.
-    val bc = cachedGateBroadcast(stream.sparkSession,
-      "sem:" + {
+    val s = stream.sparkSession
+    val bc = Artifacts.cached(s, "gate-bc:sem:" + {
         val md = java.security.MessageDigest.getInstance("MD5")
         evalVecs.map { v =>
           java.security.MessageDigest.getInstance("MD5")
@@ -1061,7 +1019,7 @@ object Curation {
             .map("%02x".format(_)).mkString
         }.sorted.foreach(h => md.update(h.getBytes("UTF-8")))
         md.digest().map("%02x".format(_)).mkString
-      })(prepared)
+      })(s.sparkContext.broadcast(prepared))
     val n2 = Dedup.SemTauNum * Dedup.SemTauNum
     val d2 = Dedup.SemTauDen * Dedup.SemTauDen
     val near = udf((v: Seq[Long]) =>
@@ -1325,8 +1283,7 @@ object Curation {
     * contact or a declined merge) pays the shingle pass. */
   private def verbatimIndexArtifact(s: SparkSession, dir: String): DataFrame =
     Artifacts.cached(s, s"verbatim-index:$dir") {
-      val nDocs = graft.sources.Warehouse.countMax(
-        s, s"docs:$dir", Tables.documents(s, dir), "doc_id")._1
+      val nDocs = graft.sources.Warehouse.corpusStats(s, dir, "documents")._1
       val width = deriveShingleWidth(nDocs)
       graft.sources.Warehouse.servedFrameMerged(
         s, "vb_index", dir, "documents",
@@ -1351,8 +1308,7 @@ object Curation {
   private[graft] def vbIncIndexArtifact(s: SparkSession,
                                         dir: String): DataFrame =
     Artifacts.cached(s, s"vb-inc-index:$dir") {
-      val nDocs = graft.sources.Warehouse.countMax(
-        s, s"docs:$dir", Tables.documents(s, dir), "doc_id")._1
+      val nDocs = graft.sources.Warehouse.corpusStats(s, dir, "documents")._1
       val width = deriveShingleWidth(nDocs)
       graft.sources.Warehouse.servedFrameMerged(
         s, "vb_inc_idx", dir, "documents",
@@ -1415,8 +1371,7 @@ object Curation {
   private def verbatimMatchesArtifact(s: SparkSession, dir: String): DataFrame = {
     val index = verbatimIndexArtifact(s, dir)
     Artifacts.cached(s, s"verbatim-matches:$dir") {
-      val nDocs = graft.sources.Warehouse.countMax(
-        s, s"docs:$dir", Tables.documents(s, dir), "doc_id")._1
+      val nDocs = graft.sources.Warehouse.corpusStats(s, dir, "documents")._1
       val width = deriveShingleWidth(nDocs)
       graft.sources.Warehouse.servedFrameMerged(
         s, "vb_matches", dir, "documents",
@@ -1472,8 +1427,7 @@ object Curation {
     val index = verbatimIndexArtifact(s, dir)
     val matches = verbatimMatchesArtifact(s, dir)
     Artifacts.cached(s, s"verbatim-offsets:$dir") {
-      val nDocs = graft.sources.Warehouse.countMax(
-        s, s"docs:$dir", Tables.documents(s, dir), "doc_id")._1
+      val nDocs = graft.sources.Warehouse.corpusStats(s, dir, "documents")._1
       val width = deriveShingleWidth(nDocs)
       graft.sources.Warehouse.servedFrameMerged(
         s, "vb_offsets", dir, "documents",
@@ -2036,8 +1990,9 @@ object Curation {
 
   private def importanceGateUdf(stream: DataFrame, model: ImportanceModel,
                                 minScore: Long): DataFrame = {
-    val bc = cachedGateBroadcast(stream.sparkSession,
-      "imp:" + modelDigest(model))(model)
+    val s = stream.sparkSession
+    val bc = Artifacts.cached(s, "gate-bc:imp:" + modelDigest(model))(
+      s.sparkContext.broadcast(model))
     val scoreOf = udf((text: String) => {
       if (text == null) 0L
       else {
@@ -2207,8 +2162,9 @@ object Curation {
     * bigram for bigram (CurationStreamSpec). */
   def importanceGateBigram(stream: DataFrame, model: ImportanceModel,
                            minScore: Long = DsirScale): DataFrame = {
-    val bc = cachedGateBroadcast(stream.sparkSession,
-      "impbi:" + modelDigest(model))(model)
+    val s = stream.sparkSession
+    val bc = Artifacts.cached(s, "gate-bc:impbi:" + modelDigest(model))(
+      s.sparkContext.broadcast(model))
     val scoreOf = udf((text: String) => {
       if (text == null) 0L
       else {
@@ -2265,10 +2221,10 @@ object Curation {
       // cut sits at 80% of max doc_id, so the store width IS the
       // full-corpus width the key always used). The prefix text is
       // never rescanned and the batch is never re-folded; the cached
-      // countMax stats pass replaces the per-key max(doc_id) job.
+      // corpus stats pass replaces the per-key max(doc_id) job.
       val sh = docShingleStore(s, dir)
-      val cut = graft.sources.Warehouse.countMax(
-        s, s"docs:$dir", Tables.documents(s, dir), "doc_id")._2 * 4 / 5
+      val cut =
+        graft.sources.Warehouse.corpusStats(s, dir, "documents")._2 * 4 / 5
       val index = sh.filter(col("doc_id") < cut)
         .select(col("sh_key")).distinct()
       noveltyBatchFromShingles(sh.filter(col("doc_id") >= cut), index)
@@ -2329,8 +2285,8 @@ object Curation {
       val docs = Tables.documents(s, dir)
       verbatimRemoveFrom(docs.select(col("doc_id"), col("text")),
         verbatimOffsetsArtifact(s, dir),
-        deriveShingleWidth(graft.sources.Warehouse.countMax(
-          s, s"docs:$dir", docs, "doc_id")._1))
+        deriveShingleWidth(
+          graft.sources.Warehouse.corpusStats(s, dir, "documents")._1))
         .orderBy("doc_id")
     }),
 
@@ -2347,8 +2303,8 @@ object Curation {
     // text) proves incremental == from-scratch.
     "q_verbatim_removal_incremental" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val width = deriveShingleWidth(graft.sources.Warehouse.countMax(
-        s, s"docs:$dir", docs, "doc_id")._1)
+      val width = deriveShingleWidth(
+        graft.sources.Warehouse.corpusStats(s, dir, "documents")._1)
       val batch = docs.filter(col("doc_id") % 5 === 0)
         .select(col("doc_id"), col("text"))
       // Store-fed (round-22): the settled slice's persisted index
@@ -2487,8 +2443,7 @@ object Curation {
       // deriveShingleWidth step, where the key falls back to the
       // inline fold rather than serve stale-width keys (the decline-
       // to-cold discipline, applied at the read side).
-      val n = graft.sources.Warehouse.countMax(
-        s, s"docs:$dir", Tables.documents(s, dir), "doc_id")._1
+      val n = graft.sources.Warehouse.corpusStats(s, dir, "documents")._1
       val w = deriveShingleWidth(n + 1)
       val sh =
         if (w == deriveShingleWidth(n))

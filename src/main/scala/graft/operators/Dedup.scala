@@ -1349,8 +1349,7 @@ object Dedup {
         s, "emb_pairs", dir, "embeddings",
         graft.sources.Warehouse.embFp(s, dir)) {
         val vectors = Similarity.quantizedVectors(Tables.embeddings(s, dir))
-        val n = graft.sources.Warehouse.countMax(
-          s, s"emb:$dir", vectors, "vec_id")._1
+        val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
         embeddingPairs(vectors, 0.35, Similarity.derivePlanes(n))
       } { (old, batch) =>
         // Append-merge lane (round-18): valid ONLY while the
@@ -1360,8 +1359,7 @@ object Dedup {
         // crossing DECLINES (cold rebuild), per the
         // [[embeddingPairsTouching]] contract.
         val vectors = Similarity.quantizedVectors(Tables.embeddings(s, dir))
-        val n = graft.sources.Warehouse.countMax(
-          s, s"emb:$dir", vectors, "vec_id")._1
+        val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
         if (Similarity.planeBlockCrossed(n, batch.count())) None
         else Some(old.unionByName(embeddingPairsTouching(
           vectors, batch.select(col("vec_id")), 0.35,
@@ -1479,8 +1477,7 @@ object Dedup {
             .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))
           .select(col("doc_id").as("vec_id"), col("cluster_rep"))
       ) { (old, delta) =>
-        val n = graft.sources.Warehouse.countMax(
-          s, s"emb:$dir", Tables.embeddings(s, dir), "vec_id")._1
+        val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
         val deltaIds = delta.select(col("vec_id"))
         if (Similarity.planeBlockCrossed(n, deltaIds.count())) None
         else Some(ccLabelsMerged(
@@ -1706,13 +1703,6 @@ object Dedup {
         count(lit(1)).as("n_occ"))
       .filter(col("df") >= minDf)
 
-  /** Per-(session, index-digest) broadcast cache for [[lineGate]]'s
-    * over-threshold path — the contaminationGate cache discipline
-    * (evict stopped sessions on every construction). */
-  private val lineGateBroadcasts =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      org.apache.spark.broadcast.Broadcast[Set[String]]]()
-
   /** Spark-md5-identical JVM hex (lowercase) for the gate's UDF path. */
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -1733,16 +1723,16 @@ object Dedup {
     * conservative default; null-screening is the quality gate's job).
     * Batch/stream agnostic — the spec pins stream == batch rewrites. */
   def lineGate(stream: DataFrame, boilerKeys: Seq[String]): DataFrame = {
-    lineGateBroadcasts.keySet.removeIf(_._1.sparkContext.isStopped)
     val cleaned: Column =
       if (boilerKeys.size <= Curation.GateInlineMax) {
         val arr = lit(boilerKeys.toArray)
         array_join(filter(split(col("text"), "\n"),
           l => !array_contains(arr, md5(l))), "\n")
       } else {
-        val key = (stream.sparkSession, md5Hex(boilerKeys.sorted.mkString("\u0000")))
-        val bc = lineGateBroadcasts.computeIfAbsent(key,
-          _ => stream.sparkSession.sparkContext.broadcast(boilerKeys.toSet))
+        val s = stream.sparkSession
+        val bc = Artifacts.cached(s,
+          "gate-bc:line:" + md5Hex(boilerKeys.sorted.mkString("\u0000")))(
+          s.sparkContext.broadcast(boilerKeys.toSet))
         val cut = udf((t: String) =>
           t.split("\n", -1).filter(l => !bc.value.contains(md5Hex(l)))
             .mkString("\n"))
@@ -1761,12 +1751,6 @@ object Dedup {
     cdcChunks(corpus).groupBy("chunk_key")
       .agg(count(lit(1)).as("n")).filter(col("n") > 1)
       .select("chunk_key")
-
-  /** Session-cached broadcasts for [[cdcGate]]'s over-threshold path —
-    * the lineGate cache discipline. */
-  private val cdcGateBroadcasts =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      org.apache.spark.broadcast.Broadcast[Set[Long]]]()
 
   /** JVM twin of the 60-bit md5 fold (`Tables.md5FoldSql`) for the
     * gate's UDF path — hex-identical to Spark's md5 on UTF-8 bytes. */
@@ -1805,7 +1789,6 @@ object Dedup {
     * `bytes.length != t.length` in the UDF), so the paths cannot
     * disagree and neither can crash. */
   def cdcGate(stream: DataFrame, dupKeys: Seq[Long]): DataFrame = {
-    cdcGateBroadcasts.keySet.removeIf(_._1.sparkContext.isStopped)
     if (dupKeys.isEmpty) return stream
     val keep: Column =
       if (dupKeys.size <= Curation.GateInlineMax) {
@@ -1823,10 +1806,10 @@ object Dedup {
             0L, (acc, c) -> acc + (c.fin - c.st + 1)) * 2
           <= length(text)""")
       } else {
-        val key = (stream.sparkSession,
-          md5Hex(dupKeys.sorted.mkString(",")))
-        val bc = cdcGateBroadcasts.computeIfAbsent(key,
-          _ => stream.sparkSession.sparkContext.broadcast(dupKeys.toSet))
+        val s = stream.sparkSession
+        val bc = Artifacts.cached(s,
+          "gate-bc:cdc:" + md5Hex(dupKeys.sorted.mkString(",")))(
+          s.sparkContext.broadcast(dupKeys.toSet))
         val ok = udf((t: String) => if (t == null) true else {
           val bytes = t.getBytes("UTF-8")
           if (bytes.length != t.length) true // non-ASCII: pass (see doc)
@@ -2042,8 +2025,8 @@ object Dedup {
       // text, as ingest would. max(doc_id) rides the memoized corpus
       // stats pass.
       val docs = Tables.documents(s, dir)
-      val cut = graft.sources.Warehouse.countMax(
-        s, s"docs:$dir", docs, "doc_id")._2 * 4 / 5
+      val cut =
+        graft.sources.Warehouse.corpusStats(s, dir, "documents")._2 * 4 / 5
       val index = cdcChunkStore(s, dir).filter(col("doc_id") < cut)
         .select("chunk_key").distinct()
       cdcDedupBatch(docs.filter(col("doc_id") >= cut), index)
@@ -2255,9 +2238,8 @@ object Dedup {
       // corpus with NULL-text fr rows the store undercounts and the
       // derived width could flip at a block boundary while the
       // oracle's stays put (round-18 advice).
-      val n = graft.sources.Warehouse.countMax(
-        s, s"docs-fr:$dir",
-        Tables.documents(s, dir).filter(col("lang") === "fr"), "doc_id")._1
+      val n = Artifacts.cached(s, s"stats:docs-fr:$dir")(
+        Tables.documents(s, dir).filter(col("lang") === "fr").count())
       simhashPairsFrom(simhashSketchStore(s, dir),
         chunks = SimhashBits / deriveSimhashWidth(n))
         .orderBy("doc_a", "doc_b")
@@ -2269,7 +2251,8 @@ object Dedup {
     // same L inside SQL, so the check stays exact while the knob moves.
     "q_dedup_embedding" -> ((s, dir) => {
       val vectors = Similarity.quantizedVectors(Tables.embeddings(s, dir))
-      embeddingPairs(vectors, 0.35, Similarity.derivePlanes(Similarity.embCount(s, dir)))
+      embeddingPairs(vectors, 0.35, Similarity.derivePlanes(
+        graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1))
         .orderBy("id_a", "id_b")
     }),
 
@@ -2296,7 +2279,8 @@ object Dedup {
     // the linearly-derived cell count (oracle derives both the same).
     "q_dedup_semantic" -> ((s, dir) => {
       val vectors = Similarity.quantizedVectors(Tables.embeddings(s, dir))
-      val k = deriveSemCells(Similarity.embCount(s, dir))
+      val k = deriveSemCells(
+        graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1)
       semanticDedup(vectors,
         vectors.filter(col("vec_id") < k)
           .select(col("vec_id").as("cid"), col("v").as("c")))
@@ -2308,7 +2292,8 @@ object Dedup {
     // walk.
     "q_dedup_semantic_resolve" -> ((s, dir) => {
       val vectors = Similarity.quantizedVectors(Tables.embeddings(s, dir))
-      val k = deriveSemCells(Similarity.embCount(s, dir))
+      val k = deriveSemCells(
+        graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1)
       resolveDupChains(semanticDedup(vectors,
         vectors.filter(col("vec_id") < k)
           .select(col("vec_id").as("cid"), col("v").as("c"))))
@@ -2320,7 +2305,8 @@ object Dedup {
     // artifact frozen from the full table, verdicts for the batch only.
     "q_dedup_semantic_incremental" -> ((s, dir) => {
       val vectors = Similarity.quantizedVectors(Tables.embeddings(s, dir))
-      val k = deriveSemCells(Similarity.embCount(s, dir))
+      val k = deriveSemCells(
+        graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1)
       semanticDedupIncremental(vectors,
         vectors.filter(col("vec_id") < k)
           .select(col("vec_id").as("cid"), col("v").as("c")),

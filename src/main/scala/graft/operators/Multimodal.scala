@@ -866,7 +866,7 @@ object Multimodal {
   private def phashSketchWithTwins(
       s: SparkSession, dir: String): (DataFrame, Int) = {
     val docs = Tables.documents(s, dir)
-    val n = graft.sources.Warehouse.countMax(s, s"docs:$dir", docs, "doc_id")._1
+    val n = graft.sources.Warehouse.corpusStats(s, dir, "documents")._1
     // Sketch + twin re-key are both PER-DOC functions, so the store
     // joins the append-merge lane (round-18): a corpus-growth step
     // decodes ONLY the new part files' payloads — the whole point of a
@@ -1081,8 +1081,7 @@ object Multimodal {
     val cents = Artifacts.cached(s, s"phash-ivf-cents:$dir") {
       graft.sources.Warehouse.servedFrame(s, "phash_cents", dir, fp) {
         val (sk, _) = phashSketchWithTwins(s, dir)
-        val n = graft.sources.Warehouse.countMax(
-          s, s"docs:$dir", Tables.documents(s, dir), "doc_id")._1 +
+        val n = graft.sources.Warehouse.corpusStats(s, dir, "documents")._1 +
           PhashPlantCount
         phashIvfCells(sk, math.ceil(math.sqrt(n.toDouble)).toInt)
       }.localCheckpoint(true)
@@ -1270,8 +1269,7 @@ object Multimodal {
   private def phashIvfTrainedArtifacts(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val fp = docsFp(s, dir)
-    val n = graft.sources.Warehouse.countMax(
-      s, s"docs:$dir", Tables.documents(s, dir), "doc_id")._1
+    val n = graft.sources.Warehouse.corpusStats(s, dir, "documents")._1
     // RETRAIN CYCLE (round-20): the Similarity.trainedIndexArtifacts
     // convention mirrored into hamming space — the trained centroid
     // table records its trained-at count; a below-ratio growth step
@@ -1515,8 +1513,7 @@ object Multimodal {
         Dedup.connectedComponents(
           phashPairsQuery(s, dir).select(col("doc_a"), col("doc_b")))
       ) { (old, delta) =>
-        val n = graft.sources.Warehouse.countMax(
-          s, s"docs:$dir", Tables.documents(s, dir), "doc_id")._1
+        val n = graft.sources.Warehouse.corpusStats(s, dir, "documents")._1
         val deltaIds = delta.select(col("doc_id"))
         if (phashWidthCrossed(n, deltaIds.count())) None
         else Some(Dedup.ccLabelsMerged(old,

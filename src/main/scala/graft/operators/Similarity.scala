@@ -222,11 +222,11 @@ object Similarity {
       graft.sources.Warehouse.servedFrameMerged(
         s, "lsh_buckets", dir, "embeddings",
         graft.sources.Warehouse.embFp(s, dir)) {
-        val n = embCount(s, dir)
+        val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
         bucketed(Tables.embeddings(s, dir)
           .select(col("vec_id"), expr(quant).as("v")), derivePlanes(n))
       } { (old, batch) =>
-        val n = embCount(s, dir)
+        val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
         if (planeBlockCrossed(n, batch.count())) None
         else Some(old.unionByName(bucketed(
           batch.select(col("vec_id"), expr(quant).as("v")),
@@ -471,17 +471,6 @@ object Similarity {
     }
     cents
   }
-
-  /** The embeddings row count through the session-cached stats pass
-    * (round-22, guide §1.2 serving overhead): ~15 registered keys each
-    * paid their own count() job for the same knob derivation — the
-    * fingerprint machinery already memoizes (count, max) under this
-    * exact token, so every key now shares ONE stats job per session.
-    * Same number by construction (a projection does not change the
-    * row count). */
-  private[operators] def embCount(s: SparkSession, dir: String): Long =
-    graft.sources.Warehouse.countMax(
-      s, s"emb:$dir", Tables.embeddings(s, dir), "vec_id")._1
 
   /** Nearest-centroid cell assignment as a partial-aggregating max_by:
     * the broadcast join emits all K candidate rows for a vector inside
@@ -816,14 +805,12 @@ object Similarity {
         graft.sources.Warehouse.embFp(s, dir)) {
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), expr(quant).as("v"))
-        val n = graft.sources.Warehouse.countMax(
-          s, s"emb:$dir", e, "vec_id")._1
+        val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
         pqEncodeWith(e, pqCodebook(e, derivePqCodes(n)))
       } { (old, batch) =>
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), expr(quant).as("v"))
-        val n = graft.sources.Warehouse.countMax(
-          s, s"emb:$dir", e, "vec_id")._1
+        val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
         // First-K append-invariance needs the batch to sit entirely
         // PAST the codebook prefix: an appended file carrying a
         // vec_id < K changes the codebook while the K step check
@@ -894,8 +881,7 @@ object Similarity {
         graft.sources.Warehouse.embFp(s, dir)) {
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), expr(quant).as("v"))
-        val n = graft.sources.Warehouse.countMax(
-          s, s"emb:$dir", e, "vec_id")._1
+        val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
         val kk = math.ceil(math.sqrt(n.toDouble)).toInt
         val centroids = e.filter(col("vec_id") < kk)
           .select(col("vec_id").as("cid"), col("v").as("c"))
@@ -904,8 +890,7 @@ object Similarity {
       } { (old, batch) =>
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), expr(quant).as("v"))
-        val n = graft.sources.Warehouse.countMax(
-          s, s"emb:$dir", e, "vec_id")._1
+        val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
         val kk = math.ceil(math.sqrt(n.toDouble)).toInt
         val kc = derivePqCodes(n)
         if (resCodesBlockCrossed(n, batch.count()) ||
@@ -945,7 +930,8 @@ object Similarity {
     Artifacts.cached(s, s"res-cents:$dir") {
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), expr(quant).as("v"))
-      val kk = math.ceil(math.sqrt(embCount(s, dir).toDouble)).toInt
+      val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
+      val kk = math.ceil(math.sqrt(n.toDouble)).toInt
       e.filter(col("vec_id") < kk)
         .select(col("vec_id").as("cid"), col("v").as("c"))
         .localCheckpoint(true)
@@ -961,8 +947,9 @@ object Similarity {
     Artifacts.cached(s, s"res-codebook:$dir") {
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), expr(quant).as("v"))
-      residualCodebook(e, resCentroidsArtifact(s, dir),
-        derivePqCodes(embCount(s, dir))).localCheckpoint(true)
+      residualCodebook(e, resCentroidsArtifact(s, dir), derivePqCodes(
+        graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1))
+        .localCheckpoint(true)
     }
 
   /** Store-fed residual IVF-PQ chain at the corpus's derived
@@ -986,7 +973,9 @@ object Similarity {
     Artifacts.cached(s, s"pq-codebook:$dir") {
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), expr(quant).as("v"))
-      pqCodebook(e, derivePqCodes(embCount(s, dir))).localCheckpoint(true)
+      pqCodebook(e, derivePqCodes(
+        graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1))
+        .localCheckpoint(true)
     }
 
   /** Store-fed flat-PQ chain at the corpus's derived code count — the
@@ -1257,8 +1246,7 @@ object Similarity {
     // GC of stale variants, and the reuse-vs-rebuild decision all live
     // in [[graft.sources.Warehouse]]. count is also Lloyd's K input,
     // so the stats pass is paid once for both purposes.
-    val (n, _) = graft.sources.Warehouse.countMax(
-      s, s"emb:$dir", e, "vec_id")
+    val (n, _) = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")
     val fp = graft.sources.Warehouse.embFp(s, dir)
     val kk = math.ceil(math.sqrt(n.toDouble)).toInt
     // Lloyd training is the expensive half of the build: persist the
@@ -1639,7 +1627,7 @@ object Similarity {
     // counts over the deterministic first-K quantizer, empty cells
     // surfaced.
     "q_knn_ivf_stats" -> ((s, dir) => {
-      val n = embCount(s, dir)
+      val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
       val kk = math.ceil(math.sqrt(n.toDouble)).toInt
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), expr(quant).as("v"))
@@ -1653,7 +1641,7 @@ object Similarity {
     // the flat-PQ codes ARE the composed index's code column, so the
     // key pays the coarse-assignment join plus the probe side only.
     "q_knn_ivfpq" -> ((s, dir) => {
-      val n = embCount(s, dir)
+      val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
       val e = Tables.embeddings(s, dir).select(col("vec_id"), expr(quant).as("v"))
       val kk = math.ceil(math.sqrt(n.toDouble)).toInt
       val centroids = e.filter(col("vec_id") < kk)
@@ -1664,7 +1652,7 @@ object Similarity {
     }),
 
     "q_knn_ivfpq_recall" -> ((s, dir) => {
-      val n = embCount(s, dir)
+      val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
       val e = Tables.embeddings(s, dir).select(col("vec_id"), expr(quant).as("v"))
       val kk = math.ceil(math.sqrt(n.toDouble)).toInt
       val centroids = e.filter(col("vec_id") < kk)
@@ -1722,7 +1710,7 @@ object Similarity {
       // Serving reads the PERSISTED bucket index (round-19); only the
       // probe side (64 rows — probeFilter pushes into the scan)
       // computes its multi-probe buckets on the fly.
-      val n = embCount(s, dir)
+      val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
       lshTopKWith(lshBucketStore(s, dir),
         probeBuckets(Tables.embeddings(s, dir)
           .select(col("vec_id"), expr(quant).as("v"))
@@ -1736,7 +1724,7 @@ object Similarity {
     // against search cost N/K). The count() is one footer-only job; both
     // engines derive the same K so the oracle stays exact at any SF.
     "q_knn_ivf" -> ((s, dir) => {
-      val n = embCount(s, dir)
+      val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
       ivfTopK(s, dir, math.ceil(math.sqrt(n.toDouble)).toInt, 8, 5)
     }),
 
@@ -1760,7 +1748,7 @@ object Similarity {
     // own approx chain plus a probes×k table read, which is how a
     // production index evaluation runs at 100 TB.
     "q_knn_recall" -> ((s, dir) => {
-      val n = embCount(s, dir)
+      val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
       val e = Tables.embeddings(s, dir).select(col("vec_id"), expr(quant).as("v"))
       val truth = knnBruteTruth(s, dir).select("probe_id", "cand_id")
       val approx = lshTopKWith(lshBucketStore(s, dir),
@@ -1773,7 +1761,7 @@ object Similarity {
     // Filtered ANN — see [[ivfFilteredTopKWith]]: the label predicate
     // inline in the cell join, FilteredNprobe over-probing.
     "q_knn_ivf_filtered" -> ((s, dir) => {
-      val n = embCount(s, dir)
+      val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
       ivfFilteredTopK(s, dir, math.ceil(math.sqrt(n.toDouble)).toInt, 8, 5)
     }),
 
@@ -1783,7 +1771,7 @@ object Similarity {
     // over-probed cell search recovers. Deterministic both sides ⇒
     // oracle-exact like the other recall audits.
     "q_knn_ivf_filtered_recall" -> ((s, dir) => {
-      val n = embCount(s, dir)
+      val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
       val truth = bruteFiltered(s, dir, 64, 5).select("probe_id", "cand_id")
       val approx = ivfFilteredTopK(
         s, dir, math.ceil(math.sqrt(n.toDouble)).toInt, 64, 5)
@@ -1796,7 +1784,7 @@ object Similarity {
     // this key makes that skew a driver-visible measured number instead
     // of a code comment, exactly like the LSH path's audit.
     "q_knn_ivf_recall" -> ((s, dir) => {
-      val n = embCount(s, dir)
+      val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
       val truth = knnBruteTruth(s, dir).select("probe_id", "cand_id")
       val approx = ivfTopK(s, dir, math.ceil(math.sqrt(n.toDouble)).toInt, 64, 5)
       recallVs(truth, approx)
@@ -1926,8 +1914,7 @@ object Similarity {
     val fp = graft.sources.Warehouse.embFp(s, dir)
     graft.operators.Artifacts.cached(s, s"knn-ivf-policy:$dir")(
       graft.sources.Warehouse.servedFrame(s, "knn_policy", dir, fp) {
-        val n = graft.sources.Warehouse.countMax(
-          s, s"emb:$dir", Tables.embeddings(s, dir), "vec_id")._1
+        val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
         val kk = math.ceil(math.sqrt(n.toDouble)).toInt
         val truth = knnBruteTruth(s, dir).select("probe_id", "cand_id")
         val firstK = ivfTopK(s, dir, kk, 64, 5).select("probe_id", "cand_id")
@@ -1952,7 +1939,7 @@ object Similarity {
     knnIvfSelectedQuantizer(s, dir) match {
       case "trained" => ivfTrainedServe(s, dir, nProbes, k)
       case _ =>
-        val n = embCount(s, dir)
+        val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
         ivfTopK(s, dir, math.ceil(math.sqrt(n.toDouble)).toInt, nProbes, k)
     }
 
@@ -2006,8 +1993,7 @@ object Similarity {
     val fp = graft.sources.Warehouse.embFp(s, dir)
     graft.operators.Artifacts.cached(s, s"knn-tier-policy:$dir")(
       graft.sources.Warehouse.servedFrame(s, "knn_tier_rows", dir, fp) {
-        val n = graft.sources.Warehouse.countMax(
-          s, s"emb:$dir", Tables.embeddings(s, dir), "vec_id")._1
+        val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
         val kk = math.ceil(math.sqrt(n.toDouble)).toInt
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), expr(quant).as("v"))
@@ -2050,7 +2036,7 @@ object Similarity {
     * follow the tier, which is the point of the policy). */
   def knnTierServeRouted(s: SparkSession, dir: String,
                          nProbes: Int, k: Int): DataFrame = {
-    val n = embCount(s, dir)
+    val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
     val kk = math.ceil(math.sqrt(n.toDouble)).toInt
     val e = Tables.embeddings(s, dir).select(col("vec_id"), expr(quant).as("v"))
     val served = knnSelectedTier(s, dir) match {
@@ -2138,12 +2124,11 @@ object Similarity {
     * flat arms, ADC approximation on the code arms. */
   def knnQuantServeRouted(s: SparkSession, dir: String,
                           nProbes: Int, k: Int): DataFrame = {
-    // Corpus stats come from the memoized countMax pass the policy
+    // Corpus stats come from the memoized stats pass the policy
     // already paid — no fresh count() job on the routed serve (the
     // trained arm needs neither n nor e at all).
     val e = Tables.embeddings(s, dir).select(col("vec_id"), expr(quant).as("v"))
-    lazy val n = graft.sources.Warehouse.countMax(
-      s, s"emb:$dir", e, "vec_id")._1
+    lazy val n = graft.sources.Warehouse.corpusStats(s, dir, "embeddings")._1
     lazy val kk = math.ceil(math.sqrt(n.toDouble)).toInt
     val served = knnSelectedQuant(s, dir) match {
       case "ivf_trained" =>

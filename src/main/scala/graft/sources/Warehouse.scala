@@ -60,15 +60,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * CONTRACTS AND SCOPE (round-16 review):
   *
-  *  - WITHIN-SESSION corpus immutability. Mutation detection is a
-  *    CROSS-PROCESS property: the session memoizes its corpus stats
-  *    ([[countMax]]) and artifact frames (operators.Artifacts,
-  *    funnelCache) on first touch, so a corpus regenerated UNDER a
-  *    live session keeps serving the first-seen state — the
-  *    engine-wide assumption every session cache has always made. A
-  *    pipeline that regenerates a corpus starts a new process (or at
-  *    minimum a new SparkSession) over it; the fingerprint then
-  *    refuses every stale table.
+  *  - Corpus state within a session. Corpus stats ([[corpusStats]])
+  *    are keyed on the table's live file stamp, so the count and max id
+  *    behind every fingerprint and every knob follow an append or an
+  *    in-place rewrite under a live session, together with
+  *    [[corpusBytes]]. Artifact frames in the session memo
+  *    (operators.Artifacts: store frames, the funnel's stage frames)
+  *    stay per session: they are taken on first touch, so a session
+  *    keeps serving the frames it first saw. A pipeline that grows a
+  *    corpus and wants its frames re-derived starts a new SparkSession;
+  *    the fingerprint then refuses every stale table.
   *  - The corrupt-directory guard covers RESOLUTION-time failures
   *    (unreadable footers, schema/DDL errors → rebuild). Data-page
   *    corruption that passes footer reads surfaces at query time, as
@@ -116,54 +117,52 @@ object Warehouse {
     java.security.MessageDigest.getInstance("MD5")
       .digest(v.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  /** (count, max id) of a corpus frame, memoized per (session, token)
-    * so the several artifacts of one family pay the stats pass once. */
-  private val countMaxCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Long, Long)]()
+  /** Id column of each corpus table [[corpusStats]] serves. */
+  private val CorpusIds = Map(
+    "documents" -> "doc_id", "embeddings" -> "vec_id", "events" -> "event_id")
 
-  def countMax(s: SparkSession, token: String, df: => DataFrame,
-               idCol: String): (Long, Long) = {
-    countMaxCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    var v = countMaxCache.get((s, token))
-    if (v == null) {
+  /** (row count, max id) of one of a dir's corpus tables, memoized in
+    * the session memo on the table's live file stamp
+    * ([[corpusFiles]], the listing `Tables.schema` takes on every read):
+    * the several artifacts and knobs of one table pay the stats pass
+    * once per corpus state, and an append moves the knob-deriving
+    * count together with the fingerprint's [[corpusBytes]]. */
+  def corpusStats(s: SparkSession, dir: String, table: String): (Long, Long) = {
+    val stamp = corpusFiles(s, dir, table).toSeq.sorted.mkString(",")
+    graft.operators.Artifacts.cached(s, s"stats:$table:$dir:${md5Hex(stamp)}") {
+      // Tables.events sets the nanos-as-long read its ts column needs.
+      val df =
+        if (table == "events") graft.Tables.events(s, dir)
+        else graft.Tables.t(s, dir, table)
       val r = df.agg(
         org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.lit(1)).as("n"),
         org.apache.spark.sql.functions.max(
-          org.apache.spark.sql.functions.col(idCol)).as("mx")).head()
-      v = (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))
-      countMaxCache.putIfAbsent((s, token), v)
+          org.apache.spark.sql.functions.col(CorpusIds(table))).as("mx")).head()
+      (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))
     }
-    v
   }
 
   /** Fingerprint token of one of a dir's tables — count + max id
-    * (memoized per session via [[countMax]], token keyed on the table)
-    * + the on-disk byte size: the corpus-state stamp every persisted
-    * artifact keys on. [[docsFp]]/[[embFp]]/[[eventsFp]] are the
-    * per-table spellings. */
-  def tableFp(s: SparkSession, dir: String, table: String, token: String,
-              df: => DataFrame, idCol: String): String = {
-    val (n, mx) = countMax(s, s"$token:$dir", df, idCol)
+    * ([[corpusStats]]) + the on-disk byte size: the corpus-state stamp
+    * every persisted artifact keys on. [[docsFp]]/[[embFp]]/[[eventsFp]]
+    * are the per-table spellings. */
+  def tableFp(s: SparkSession, dir: String, table: String): String = {
+    val (n, mx) = corpusStats(s, dir, table)
     fpToken(n, mx, corpusBytes(s, dir, table))
   }
 
-  /** Fingerprint token of a dir's DOCUMENTS table. The `docs:` stats
-    * token is shared with every other documents countMax caller — one
-    * stats pass per session, whoever asks first. */
+  /** Fingerprint token of a dir's DOCUMENTS table. */
   def docsFp(s: SparkSession, dir: String): String =
-    tableFp(s, dir, "documents", "docs",
-      graft.Tables.documents(s, dir), "doc_id")
+    tableFp(s, dir, "documents")
 
   /** The embeddings-table twin of [[docsFp]]. */
   def embFp(s: SparkSession, dir: String): String =
-    tableFp(s, dir, "embeddings", "emb",
-      graft.Tables.embeddings(s, dir), "vec_id")
+    tableFp(s, dir, "embeddings")
 
   /** The events-table twin of [[docsFp]]. */
   def eventsFp(s: SparkSession, dir: String): String =
-    tableFp(s, dir, "events", "events",
-      graft.Tables.events(s, dir), "event_id")
+    tableFp(s, dir, "events")
 
   /** Fold two fingerprint tokens into one — for artifacts derived
     * from MORE THAN ONE input table (the funnel's semantic stage
@@ -194,7 +193,7 @@ object Warehouse {
 
   private def logHit(s: SparkSession, family: String, dir: String,
                      hit: Boolean): Unit = {
-    // Stopped-session eviction (the countMaxCache discipline): a
+    // Stopped-session eviction (the Artifacts.cached discipline): a
     // long-lived JVM cycling sessions that resolve tables without ever
     // draining (any non-Bench caller) must not leak one map per dead
     // session.

@@ -17,8 +17,8 @@ package graft.tools
   *      embeddings (stride 50: 2000 → 2040 stays inside the 8-plane
   *      derivePlanes block, so the plane-knob lanes MERGE instead of
   *      declining — the decline arm is WarehouseSpec's job);
-  *   4. re-resolve in a FRESH session (fresh corpus stats ⟹ the new
-  *      fingerprint): the append-merge lanes publish the grown stores.
+  *   4. re-resolve in a FRESH session (store frames memoize per
+  *      session): the append-merge lanes publish the grown stores.
   *
   * A subsequent `graft.Verify <outDir> … <store-fed keys>` then hits
   * exactly those merge-produced tables from a fresh JVM, and
@@ -55,8 +55,8 @@ object MergeOracleStage {
     val nv = MergeStage.append(spark, out, "embeddings", "vec_id", stride = 50)
     println(s"[mergeoracle] appended $nd docs, $ne events (~5%), " +
       s"$nv embeddings (~2%, inside the plane block)")
-    // Fresh session: corpus stats memoize per session, so this is the
-    // new-ingest-process resolution — the merge lanes' fingerprint.
+    // Fresh session: store frames memoize per session, so this is the
+    // new-ingest-process resolution at the merge lanes' fingerprint.
     warmAll(spark.newSession())
     println("[mergeoracle] stores re-resolved at the grown state " +
       "(merge lanes published; check the Warehouse 'merge lane' log lines)")

@@ -19,17 +19,6 @@ object MergeStage {
     s.read.parquet(s"$src/$table.parquet").coalesce(4)
       .write.mode("overwrite").parquet(s"$dir/$table.parquet")
 
-  /** Fingerprint of the scratch table's CURRENT state, computed fresh —
-    * `Warehouse.docsFp`/`eventsFp` memoize corpus stats per session and
-    * would serve the pre-append numbers after the append. */
-  def fpOf(s: SparkSession, dir: String, table: String, idCol: String)
-      : String = {
-    val r = s.read.parquet(s"$dir/$table.parquet")
-      .agg(count(lit(1)), max(col(idCol))).head()
-    graft.sources.Warehouse.fpToken(r.getLong(0), r.getLong(1),
-      graft.sources.Warehouse.corpusBytes(s, dir, table))
-  }
-
   /** Append a ~(100/stride)% batch as one new part file: id-shifted
     * copies of every stride-th row (default 20 → ~5%). Events rows also
     * ts-shift past the corpus max so the appended slice is a valid

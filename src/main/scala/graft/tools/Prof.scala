@@ -3,11 +3,13 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Shared harness for the dev profilers (ProfDedup, ProfCuration):
-  * ONE session config and ONE timing helper, so profile numbers from
-  * different families are always taken under identical settings. */
+  * ONE session config (Bench's, extensions included) and ONE timing
+  * helper, so profile numbers from different families are always taken
+  * under the settings the bench measures. */
 object Prof {
   def session(cpus: Int = 32): SparkSession = {
     val s = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -38,8 +38,8 @@ object ProfMerge {
       graft.sources.Warehouse.servedFrameMerged(
         spark, name, dir, table, fp)(cold)(merge).count()
     val docs = () => spark.read.parquet(s"$dir/documents.parquet")
-    val dFp1 = MergeStage.fpOf(spark, dir, "documents", "doc_id")
-    val eFp1 = MergeStage.fpOf(spark, dir, "events", "event_id")
+    val dFp1 = graft.sources.Warehouse.docsFp(spark, dir)
+    val eFp1 = graft.sources.Warehouse.eventsFp(spark, dir)
     // COLD builds at the base corpus (production callbacks verbatim).
     window("minhash_bands COLD")(fam("pm_bands", "documents", dFp1)(
       graft.operators.Dedup.minhashBandIndex(docs()))(
@@ -86,7 +86,7 @@ object ProfMerge {
         graft.Tables.embeddings(spark, dir)),
       graft.operators.Similarity.derivePqCodes(
         graft.Tables.embeddings(spark, dir).count()))
-    val vFp1 = MergeStage.fpOf(spark, dir, "embeddings", "vec_id")
+    val vFp1 = graft.sources.Warehouse.embFp(spark, dir)
     window("pq_codes COLD")(fam("pm_pqc", "embeddings", vFp1)(
       graft.operators.Similarity.pqEncodeWith(
         graft.operators.Similarity.quantizedVectors(
@@ -99,8 +99,8 @@ object ProfMerge {
     val nd = MergeStage.append(spark, dir, "documents", "doc_id")
     val ne = MergeStage.append(spark, dir, "events", "event_id")
     println(s"[merge] appended $nd docs, $ne events (~5% each)")
-    val dFp2 = MergeStage.fpOf(spark, dir, "documents", "doc_id")
-    val eFp2 = MergeStage.fpOf(spark, dir, "events", "event_id")
+    val dFp2 = graft.sources.Warehouse.docsFp(spark, dir)
+    val eFp2 = graft.sources.Warehouse.eventsFp(spark, dir)
     def noCold = sys.error("cold must not run"): org.apache.spark.sql.DataFrame
     window("minhash_bands MERGE (+5%)")(fam("pm_bands", "documents", dFp2)(
       noCold)((old, b) => Some(old.unionByName(
@@ -126,7 +126,7 @@ object ProfMerge {
     // the MergeOracleStage convention).
     val nv = MergeStage.append(spark, dir, "embeddings", "vec_id", 50)
     println(s"[merge] appended $nv embeddings (~2%)")
-    val vFp2 = MergeStage.fpOf(spark, dir, "embeddings", "vec_id")
+    val vFp2 = graft.sources.Warehouse.embFp(spark, dir)
     window("pq_codes MERGE (+2%)")(fam("pm_pqc", "embeddings", vFp2)(
       noCold)((old, b) => Some(old.unionByName(
         graft.operators.Similarity.pqEncodeWith(

@@ -69,8 +69,8 @@ object StageX10Merge {
       .foreach(f => java.nio.file.Files.move(f.toPath,
         java.nio.file.Paths.get(s"$out/events.parquet/${f.getName}")))
     println(s"[x10merge] appended same-user continuation slice")
-    // Fresh session: the corpus-stats memo is per session, so the new
-    // fingerprint is computed fresh — exactly a new ingest process.
+    // Fresh session: store frames memoize per session, so the stores
+    // re-resolve at the new fingerprint — exactly a new ingest process.
     val s2 = spark.newSession()
     window("events stores MERGE (+copy)")(
       graft.operators.Events.warmEventsStores(s2, out))

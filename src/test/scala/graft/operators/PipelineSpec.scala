@@ -3022,6 +3022,86 @@ class PipelineSpec extends SparkSpec {
       .collect().head.getLong(0) == 42L))
   }
 
+  test("artifact cache: a non-DataFrame value builds ONCE per key") {
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    def stats(key: String): (Long, Long) =
+      Artifacts.cached(spark, key) { builds.incrementAndGet(); (7L, 35L) }
+    assert(stats("spec-tuple-a") == ((7L, 35L)))
+    assert(stats("spec-tuple-a") == ((7L, 35L)))
+    assert(builds.get == 1, s"build ran ${builds.get} times for one key")
+    assert(stats("spec-tuple-b") == ((7L, 35L)))
+    assert(builds.get == 2, "a second key must build its own entry")
+  }
+
+  test("corpus stats follow an appended part file; the docs fingerprint moves") {
+    // The stats memo is keyed on the table's file stamp, so an append
+    // under a live session moves the knob-deriving count together with
+    // the fingerprint's byte size.
+    val dir = java.nio.file.Files.createTempDirectory("graft-stats").toString
+    try {
+      graft.tools.MergeStage.stage(spark, sfDir, dir, "documents")
+      def fresh(): (Long, Long) = {
+        val r = spark.read.parquet(s"$dir/documents.parquet")
+          .agg(count(lit(1)), max(col("doc_id"))).head()
+        (r.getLong(0), r.getLong(1))
+      }
+      val before = graft.sources.Warehouse.corpusStats(spark, dir, "documents")
+      assert(before == fresh())
+      val fp1 = graft.sources.Warehouse.docsFp(spark, dir)
+      val added = graft.tools.MergeStage.append(spark, dir, "documents", "doc_id")
+      assert(added > 0)
+      val after = graft.sources.Warehouse.corpusStats(spark, dir, "documents")
+      assert(after == fresh(), s"stale stats $after after the append")
+      assert(after._1 == before._1 + added)
+      assert(graft.sources.Warehouse.docsFp(spark, dir) != fp1)
+    } finally graft.tools.MergeStage.cleanup(spark, dir)
+  }
+
+  test("gate broadcasts: a gate rebuilt over equal content reuses ONE broadcast") {
+    // Broadcast ids are sequential per SparkContext and building a gate
+    // runs no job, so the gap between two probe ids counts the
+    // broadcasts created in between.
+    import spark.implicits._
+    val sc = spark.sparkContext
+    def probe(): Long = { val b = sc.broadcast(0); b.destroy(); b.id }
+    val stream = Seq("a b c", "line one\nline two").toDF("text")
+    val n = Curation.GateInlineMax + 1
+    val shingles = (0 until n).map(i => s"spec-gate $i")
+    val lines = (0 until n).map(i => f"$i%032x")
+    val chunks = (0 until n).map(_.toLong)
+    val gates = Seq[(String, Boolean => org.apache.spark.sql.DataFrame)](
+      "contamination" -> (rev => Curation.contaminationGate(stream,
+        Curation.EvalShingles(2, if (rev) shingles.reverse else shingles))),
+      "line" -> (rev => Dedup.lineGate(stream,
+        if (rev) lines.reverse else lines)),
+      "cdc" -> (rev => Dedup.cdcGate(stream,
+        if (rev) chunks.reverse else chunks)))
+    gates.foreach { case (name, build) =>
+      val id0 = probe()
+      build(false)
+      val id1 = probe()
+      build(true)
+      val id2 = probe()
+      assert(id1 - id0 == 2, s"$name: first build made ${id1 - id0 - 1} broadcasts")
+      assert(id2 - id1 == 1, s"$name: equal-content rebuild made ${id2 - id1 - 1}")
+      assert(build(true).count() == build(false).count())
+    }
+  }
+
+  test("artifact cache: entries of a STOPPED session are swept") {
+    // A JVM holds one live SparkContext, and the suites share it, so
+    // the session is stopped in a child JVM (ArtifactsSweepProbe).
+    import scala.jdk.CollectionConverters._
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filterNot(_.startsWith("-Xmx"))
+    val cmd = Seq(sys.props("java.home") + "/bin/java") ++ jvmArgs ++
+      Seq("-Xmx512m", "-cp", sys.props("java.class.path"),
+        "graft.operators.ArtifactsSweepProbe")
+    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(p.getInputStream).mkString
+    assert(p.waitFor() == 0, out.linesIterator.toSeq.takeRight(20).mkString("\n"))
+  }
+
   test("volume anomaly: strict-> boundary day and zero-variance-window mean are NOT anomalies") {
     import spark.implicits._
     val D = Events.DayNs
@@ -3586,5 +3666,31 @@ class PipelineSpec extends SparkSpec {
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toList
     // centroid(0) = [-666], centroid(1) = [2000*1000 div 1 = 2000000]
     assert(got == List((0, 1, -666L * 2000000L)), s"$got")
+  }
+}
+
+/** Child-JVM half of PipelineSpec's stopped-session sweep test: memoize
+  * a value in a session, stop it, touch the memo from a new session,
+  * and exit 0 only if the value became unreachable. */
+object ArtifactsSweepProbe {
+  def main(args: Array[String]): Unit = {
+    def session() = org.apache.spark.sql.SparkSession.builder()
+      .master("local[1]").config("spark.ui.enabled", "false").getOrCreate()
+    val a = session()
+    a.sparkContext.setLogLevel("ERROR")
+    val held = new java.lang.ref.WeakReference(
+      Artifacts.cached(a, "sweep-probe")(new Array[Byte](1 << 20)))
+    a.stop()
+    val b = session()
+    Artifacts.cached(b, "sweep-probe")(new Array[Byte](1))
+    var tries = 0
+    while (held.get != null && tries < 20) {
+      System.gc(); Thread.sleep(50); tries += 1
+    }
+    b.stop()
+    if (held.get != null) {
+      System.err.println("value of a stopped session is still held")
+      System.exit(1)
+    }
   }
 }
